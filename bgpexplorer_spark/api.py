@@ -7,7 +7,9 @@ src/bgpsvc.rs:457-491). Here the serving layer is a thin stdlib
 ``http.server`` over the Spark engine — queries run through the same
 operators as the programmatic API; the response envelope matches
 src/bgpsvc.rs:690-706 ``{ribtype, length, skip, limit, maxdepth,
-onlyactive, found, items}``.
+onlyactive, found, items}``. ``ROUTES`` maps each path to a
+:class:`BgpExplorerService` method and its typed query params; one
+dispatcher answers 400 on a bad param and 500 JSON on an engine error.
 
 The reference's RwLock + 120 s read-timeout + HTTP 408 path (U11) has no
 analog: DataFrames over immutable snapshots need no reader lock.
@@ -18,11 +20,13 @@ from __future__ import annotations
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import NamedTuple
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bgpexplorer_spark.functions.timeutil import parse_ts_param
 from bgpexplorer_spark.operators.query import QueryParams, query_rib, to_nested_json
 from bgpexplorer_spark.operators.rib import statistics
 from bgpexplorer_spark.schemas import RIB_NAMES
@@ -32,15 +36,14 @@ class BgpExplorerService:
 
     ``route_counts`` — maintained per-rib route counts (O3 ``length``
     served O(1) like the reference's map size, src/bgpsvc.rs:677). Build
-    from a snapshot with :meth:`from_snapshot`, or pass
-    ``exact_length=True`` to force the per-request dedup-count scan."""
+    from a snapshot with :meth:`from_snapshot`; without counts they are
+    computed once on first use."""
 
     def __init__(
         self,
         history: DataFrame,
         sessions: DataFrame | None = None,
         route_counts: dict[str, int] | None = None,
-        exact_length: bool = False,
         ws_apply_filter: bool = False,
         roas: DataFrame | None = None,
         roas_v6: DataFrame | None = None,
@@ -69,7 +72,9 @@ class BgpExplorerService:
         # FSM transition log (read_mrt_state_changes) for /api/analytics/sessions
         self.state_changes = state_changes
         self.route_counts = dict(route_counts) if route_counts else None
-        self.exact_length = exact_length
+        # zero-arg callable returning the current history DataFrame (the
+        # live daemon sets it); bump_state_version refreshes through it
+        self.history_provider = None
         self.state = "Established"  # O8 (src/bgpsvc.rs:429-435)
         # S7 live feed: publish micro-batches via self.feed.publish_batch
         # (e.g. from run_ingest's foreachBatch); ws_apply_filter=True turns
@@ -79,18 +84,13 @@ class BgpExplorerService:
         # whois deployment knobs (src/config.rs:338-342): registry→server
         # map (whoisjsonconfig) + pinned resolvers (whoisdns) + timeout
         self.svc_config = svc_config
-        # per-state memo for the analytics reports that materialize a
-        # localCheckpointed distinct set per request (relationships /
-        # deagg / hijacks): repeated dashboard polls reuse the
-        # checkpointed result instead of rebuilding it. Keyed by
-        # (report, rib, state_version); bump_state_version() invalidates
-        # after new ingest — the same discipline as route_counts — and a
-        # TTL (analytics_memo_ttl seconds, default 60) bounds staleness
-        # for deployments that ingest live WITHOUT wiring
-        # run_ingest(service=...), so a memoized report can never
-        # outlive the poll interval by much. TTL 0 disables memoization.
-        # The memoized frames are report-sized (per-AS / per-pair rows),
-        # not RIB-sized.
+        # per-state memo for the reports that localCheckpoint a distinct
+        # set per request (relationships / deagg / hijacks), so repeated
+        # polls reuse it. Keyed by (report, rib, state_version):
+        # bump_state_version() invalidates after ingest, like
+        # route_counts, and a TTL (analytics_memo_ttl seconds; 0
+        # disables) bounds staleness where live ingest is not wired to
+        # run_ingest(service=...). Memoized frames are report-sized.
         self._state_version = 0
         self.analytics_memo_ttl = 60.0
         self._analytics_memo: dict[tuple, tuple[DataFrame, float]] = {}
@@ -102,6 +102,10 @@ class BgpExplorerService:
         # parallel)
         self._memo_lock = threading.Lock()
         self._memo_building: dict[tuple, threading.Lock] = {}
+        # whois/dns wire transports; None → the socket/UDP defaults
+        self.whois_transport = None
+        self.dns_transport = None
+        self._ttl_cache: dict[str, tuple[float, str]] = {}
         self.whois_server_map = None
         if svc_config is not None and getattr(svc_config, "whoisjsonconfig", None):
             from bgpexplorer_spark.operators.whois import WhoisServerMap
@@ -110,12 +114,9 @@ class BgpExplorerService:
                 svc_config.whoisjsonconfig
             )
 
-    def _length(self, rib: str) -> int | None:
+    def _length(self, rib: str) -> int:
         """Maintained count for ``rib``; computed once and memoized when
-        the service was built without snapshot counts. None → query_rib
-        runs the exact per-request scan (exact_length=True)."""
-        if self.exact_length:
-            return None
+        the service was built without snapshot counts."""
         if self.route_counts is None:
             from bgpexplorer_spark.operators.rib import route_counts as rc
 
@@ -126,17 +127,14 @@ class BgpExplorerService:
 
     @classmethod
     def from_snapshot(cls, spark, path: str, sessions: DataFrame | None = None):
-        """S5 + maintained counts: missing counts (pre-counts snapshot)
-        are computed once here, not per request."""
-        from bgpexplorer_spark.operators.rib import (
-            read_route_counts, read_snapshot, route_counts as rc,
-        )
+        """S5 + maintained counts: a pre-counts snapshot's counts are
+        computed once, on first use (:meth:`_length`), not per request."""
+        from bgpexplorer_spark.operators.rib import read_route_counts, read_snapshot
 
-        hist = read_snapshot(spark, path)
-        counts = read_route_counts(spark, path)
-        if counts is None:
-            counts = {r["rib"]: r["routes"] for r in rc(hist).collect()}
-        return cls(hist, sessions=sessions, route_counts=counts)
+        return cls(
+            read_snapshot(spark, path), sessions=sessions,
+            route_counts=read_route_counts(spark, path),
+        )
 
     def api_json(self, rib: str, **params) -> dict:
         """GET /api/json/<rib> — the §3.1 pipeline; unknown rib names fall
@@ -151,14 +149,9 @@ class BgpExplorerService:
             for row in to_nested_json(r).collect()
         }
         return {
-            "ribtype": r.ribtype,
-            "length": r.length,
-            "skip": r.skip,
-            "limit": r.limit,
-            "maxdepth": r.maxdepth,
-            "onlyactive": r.onlyactive,
-            "found": r.found,
-            "items": items,
+            "ribtype": r.ribtype, "length": r.length, "skip": r.skip,
+            "limit": r.limit, "maxdepth": r.maxdepth,
+            "onlyactive": r.onlyactive, "found": r.found, "items": items,
         }
 
     def _memo_report(self, name: str, rib: str, build):
@@ -176,22 +169,20 @@ class BgpExplorerService:
         # not change the key mid-request (the stored frame stays keyed to
         # the state it was built from and ages out on the next clear)
         key = (name, rib, self._state_version)
-        with self._memo_lock:
+
+        def fresh():  # caller holds _memo_lock
             hit = self._analytics_memo.get(key)
-            if (
-                hit is not None
-                and time.monotonic() - hit[1] < self.analytics_memo_ttl
-            ):
+            if hit is not None and time.monotonic() - hit[1] < self.analytics_memo_ttl:
                 return hit[0]
+
+        with self._memo_lock:
+            if (df := fresh()) is not None:
+                return df
             keylock = self._memo_building.setdefault(key, threading.Lock())
         with keylock:
             with self._memo_lock:
-                hit = self._analytics_memo.get(key)
-                if (
-                    hit is not None
-                    and time.monotonic() - hit[1] < self.analytics_memo_ttl
-                ):
-                    return hit[0]
+                if (df := fresh()) is not None:
+                    return df
             df = build().localCheckpoint(eager=True)
             with self._memo_lock:
                 self._analytics_memo[key] = (df, time.monotonic())
@@ -212,11 +203,9 @@ class BgpExplorerService:
         # then serve under the new version for a full TTL. A request
         # racing ahead of the bump memos new history under the OLD
         # version, which the clear below discards — harmless.
-        provider = getattr(self, "history_provider", None)
-        if provider is not None:
-            self.history = provider()
-        if not self.exact_length:
-            self.route_counts = None
+        if self.history_provider is not None:
+            self.history = self.history_provider()
+        self.route_counts = None
         with self._memo_lock:
             self._state_version += 1
             self._analytics_memo.clear()
@@ -236,14 +225,18 @@ class BgpExplorerService:
         return self.history
 
     @staticmethod
-    def _page(df, k: int, skip: int):
+    def _page(df, k: int, skip: int, cols: dict[str, str]) -> list[dict]:
         """Serving-layer result cap (deterministic order assumed set by
         the caller): every analytics endpoint collects at most ``k``
         rows after ``skip`` — at DFZ scale these reports run 10^3-10^5
-        rows and an uncapped collect is a driver-memory DoS."""
+        rows and an uncapped collect is a driver-memory DoS. Each
+        collected row is projected to ``{json_key: row[column]}``."""
         if skip:
             df = df.offset(skip)
-        return df.limit(k)
+        return [
+            {key: r[col] for key, col in cols.items()}
+            for r in df.limit(k).collect()
+        ]
 
     def api_moas(
         self, rib: str = "ipv4u", asof=None, k: int = 1000, skip: int = 0
@@ -259,18 +252,11 @@ class BgpExplorerService:
             if asof is not None
             else current_state(self.history)
         )
-        rows = self._page(
+        return self._page(
             moas_conflicts(st.filter(F.col("rib") == rib)).orderBy("nlri_str"),
             k, skip,
-        ).collect()
-        return [
-            {
-                "nlri": r.nlri_str,
-                "origins": list(r.origins),
-                "n_origins": r.n_origins,
-            }
-            for r in rows
-        ]
+            {"nlri": "nlri_str", "origins": "origins", "n_origins": "n_origins"},
+        )
 
     def api_rpki(
         self, rib: str = "ipv4u", asof=None, k: int = 1000, skip: int = 0
@@ -306,14 +292,11 @@ class BgpExplorerService:
         try:
             summary = {r["validity"]: r["n"] for r in
                        v.groupBy("validity").agg(F.count(F.lit(1)).alias("n")).collect()}
-            invalid = [
-                {"nlri": r.nlri_str, "origin_as": r.origin_as}
-                for r in self._page(
-                    v.filter(F.col("validity") == "Invalid")
-                    .orderBy("nlri_str", "origin_as"),
-                    k, skip,
-                ).collect()
-            ]
+            invalid = self._page(
+                v.filter(F.col("validity") == "Invalid")
+                .orderBy("nlri_str", "origin_as"),
+                k, skip, {"nlri": "nlri_str", "origin_as": "origin_as"},
+            )
         finally:
             v.unpersist()
         return {
@@ -335,20 +318,13 @@ class BgpExplorerService:
 
         if t1 is None or t2 is None:
             return [{"error": "t1 and t2 are required"}]
-        rows = self._page(
+        return self._page(
             rib_diff(self.history.filter(F.col("rib") == rib), t1, t2)
             .orderBy("nlri_str"),
             k, skip,
-        ).collect()
-        return [
-            {
-                "nlri": r.nlri_str,
-                "change": r.change,
-                "origins_before": r.origins_before,
-                "origins_after": r.origins_after,
-            }
-            for r in rows
-        ]
+            {"nlri": "nlri_str", "change": "change",
+             "origins_before": "origins_before", "origins_after": "origins_after"},
+        )
 
     def api_bogons(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
@@ -377,13 +353,10 @@ class BgpExplorerService:
             F.lit("martian-prefix").alias("kind"),
             F.col("martian").alias("detail"),
         )
-        rows = self._page(
-            asns.unionByName(martians).orderBy("kind", "nlri_str"), k, skip
-        ).collect()
-        return [
-            {"nlri": r.nlri_str, "kind": r.kind, "detail": r.detail}
-            for r in rows
-        ]
+        return self._page(
+            asns.unionByName(martians).orderBy("kind", "nlri_str"), k, skip,
+            {"nlri": "nlri_str", "kind": "kind", "detail": "detail"},
+        )
 
     def api_damping(
         self, rib: str = "ipv4u", at=None, half_life: int = 900,
@@ -405,18 +378,13 @@ class BgpExplorerService:
             at = int(
                 newest.replace(tzinfo=datetime.timezone.utc).timestamp() * 1000
             )
-        rows = self._page(
+        return self._page(
             flap_damping(h, at, half_life_sec=float(half_life))
             .orderBy(F.col("penalty").desc(), "nlri_str"),
             k, skip,
-        ).collect()
-        return [
-            {
-                "nlri": r.nlri_str, "n_flaps": r.n_flaps, "penalty": r.penalty,
-                "suppressed": r.suppressed, "reusable": r.reusable,
-            }
-            for r in rows
-        ]
+            {"nlri": "nlri_str", "n_flaps": "n_flaps", "penalty": "penalty",
+             "suppressed": "suppressed", "reusable": "reusable"},
+        )
 
     def api_flappers(self, rib: str = "ipv4u", k: int = 20) -> list[dict]:
         """GET /api/analytics/flappers[?rib=&k=] — the k noisiest
@@ -438,28 +406,21 @@ class BgpExplorerService:
         from bgpexplorer_spark.functions.timeutil import ts_to_millis
         from bgpexplorer_spark.operators.analytics import session_stability
 
-        rows = self._page(
+        return self._page(
             session_stability(self.state_changes)
             .withColumn("first_ts_ms", ts_to_millis(F.col("first_ts")))
             .withColumn("last_ts_ms", ts_to_millis(F.col("last_ts")))
             .orderBy("peer_addr", "peer_as"),
             k, skip,
-        ).collect()
-        return [
-            {
-                "peer": r.peer_addr, "peer_as": r.peer_as,
-                "transitions": r.n_transitions,
-                "established": r.n_established, "lost": r.n_lost,
-                "last_state": r.last_state,
-                "first_ts": r.first_ts_ms, "last_ts": r.last_ts_ms,
-            }
-            for r in rows
-        ]
+            {"peer": "peer_addr", "peer_as": "peer_as",
+             "transitions": "n_transitions", "established": "n_established",
+             "lost": "n_lost", "last_state": "last_state",
+             "first_ts": "first_ts_ms", "last_ts": "last_ts_ms"},
+        )
 
     def api_route_ages(self, rib: str = "ipv4u", asof=None, k: int = 100) -> list[dict]:
         """GET /api/analytics/ages[?rib=&asof=&k=] — oldest-first route
         age report over the (optionally time-traveled) active state."""
-        from bgpexplorer_spark.functions.timeutil import parse_ts_param
         from bgpexplorer_spark.operators.analytics import route_age_report
 
         at = (
@@ -467,19 +428,27 @@ class BgpExplorerService:
             if asof is not None
             else None
         )
-        rows = (
+        return self._page(
             route_age_report(self.history.filter(F.col("rib") == rib), at)
-            .orderBy(F.col("age_sec").desc(), "nlri_str")
-            .limit(k)
-            .collect()
+            .orderBy(F.col("age_sec").desc(), "nlri_str"),
+            k, 0,
+            {"nlri": "nlri_str", "session_id": "session_id",
+             "age_sec": "age_sec", "n_events": "n_events"},
         )
-        return [
-            {
-                "nlri": r.nlri_str, "session_id": r.session_id,
-                "age_sec": r.age_sec, "n_events": r.n_events,
-            }
-            for r in rows
-        ]
+
+    def _active(self, rib: str) -> DataFrame:
+        """Active state of one rib (``current_state`` of its history)."""
+        from bgpexplorer_spark.operators.rib import current_state
+
+        return current_state(self.history.filter(F.col("rib") == rib))
+
+    def _relationships(self, rib: str) -> DataFrame:
+        """Memoized Gao inference, shared by /relationships and /cones."""
+        from bgpexplorer_spark.operators.analytics import as_relationships
+
+        return self._memo_report(
+            "relationships", rib, lambda: as_relationships(self._active(rib))
+        )
 
     def api_peer_agreement(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
@@ -487,66 +456,45 @@ class BgpExplorerService:
         """GET /api/analytics/agreement[?rib=&k=&skip=] — pairwise
         Jaccard of the sessions' active prefix sets."""
         from bgpexplorer_spark.operators.analytics import peer_agreement
-        from bgpexplorer_spark.operators.rib import current_state
 
-        st = current_state(self.history.filter(F.col("rib") == rib))
-        rows = self._page(
-            peer_agreement(st).orderBy("session_a", "session_b"), k, skip
-        ).collect()
-        return [
-            {
-                "session_a": r.session_a, "session_b": r.session_b,
-                "n_shared": r.n_shared, "jaccard": r.jaccard,
-            }
-            for r in rows
-        ]
+        return self._page(
+            peer_agreement(self._active(rib)).orderBy("session_a", "session_b"),
+            k, skip,
+            {"session_a": "session_a", "session_b": "session_b",
+             "n_shared": "n_shared", "jaccard": "jaccard"},
+        )
 
     def api_as_relationships(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
     ) -> list[dict]:
         """GET /api/analytics/relationships[?rib=&k=&skip=] — Gao-style
         c2p/p2c/p2p inference over the active state's AS paths."""
-        from bgpexplorer_spark.operators.analytics import as_relationships
-        from bgpexplorer_spark.operators.rib import current_state
-
-        rel = self._memo_report(
-            "relationships", rib,
-            lambda: as_relationships(
-                current_state(self.history.filter(F.col("rib") == rib))
-            ),
+        return self._page(
+            self._relationships(rib).orderBy("as_low", "as_high"), k, skip,
+            {"as_low": "as_low", "as_high": "as_high", "rel": "rel",
+             "votes_low_customer": "n_low_customer",
+             "votes_high_customer": "n_high_customer"},
         )
-        rows = self._page(rel.orderBy("as_low", "as_high"), k, skip).collect()
-        return [
-            {
-                "as_low": r.as_low, "as_high": r.as_high, "rel": r.rel,
-                "votes_low_customer": r.n_low_customer,
-                "votes_high_customer": r.n_high_customer,
-            }
-            for r in rows
-        ]
 
     def api_martians(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
     ) -> list[dict]:
         """GET /api/analytics/martians[?rib=&k=&skip=] — active routes
         inside RFC 6890 special-purpose space, v4 and v6 registries."""
-        from bgpexplorer_spark.functions.iputil import v4_to_dotted
         from bgpexplorer_spark.operators.analytics import (
             martian_prefixes,
             martian_prefixes_v6,
         )
-        from bgpexplorer_spark.operators.rib import current_state
 
-        st = current_state(self.history.filter(F.col("rib") == rib))
+        st = self._active(rib)
         v4 = martian_prefixes(st.filter(F.col("addr_v4").isNotNull()))
         v6 = martian_prefixes_v6(st.filter(F.col("addr_v6").isNotNull()))
-        rows = self._page(
+        return self._page(
             v4.select("nlri_str", "martian")
             .unionByName(v6.select("nlri_str", "martian"))
             .orderBy("nlri_str"),
-            k, skip,
-        ).collect()
-        return [{"nlri": r.nlri_str, "range": r.martian} for r in rows]
+            k, skip, {"nlri": "nlri_str", "range": "martian"},
+        )
 
     def api_route_leaks(
         self, rib: str = "ipv4u", k: int = 100, skip: int = 0
@@ -555,19 +503,11 @@ class BgpExplorerService:
         valley-free violations over the active state's paths under the
         inferred relationship graph."""
         from bgpexplorer_spark.operators.analytics import route_leaks
-        from bgpexplorer_spark.operators.rib import current_state
 
-        st = current_state(self.history.filter(F.col("rib") == rib))
-        rows = self._page(
-            route_leaks(st).orderBy("path_str"), k, skip
-        ).collect()
-        return [
-            {
-                "path": r.path_str, "leaker_asn": r.leaker_asn,
-                "leak_pos": r.leak_pos,
-            }
-            for r in rows
-        ]
+        return self._page(
+            route_leaks(self._active(rib)).orderBy("path_str"), k, skip,
+            {"path": "path_str", "leaker_asn": "leaker_asn", "leak_pos": "leak_pos"},
+        )
 
     def api_upstream_diversity(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
@@ -576,22 +516,15 @@ class BgpExplorerService:
         distinct penultimate-hop count over the active state (single- vs
         multi-homed resilience report)."""
         from bgpexplorer_spark.operators.analytics import upstream_diversity
-        from bgpexplorer_spark.operators.rib import current_state
 
-        st = current_state(self.history.filter(F.col("rib") == rib))
-        rows = self._page(
-            upstream_diversity(st).orderBy(
+        return self._page(
+            upstream_diversity(self._active(rib)).orderBy(
                 F.col("n_upstreams"), F.col("n_prefixes").desc(), "origin_as"
             ),
             k, skip,
-        ).collect()
-        return [
-            {
-                "origin_as": r.origin_as, "n_upstreams": r.n_upstreams,
-                "n_prefixes": r.n_prefixes, "single_homed": r.single_homed,
-            }
-            for r in rows
-        ]
+            {"origin_as": "origin_as", "n_upstreams": "n_upstreams",
+             "n_prefixes": "n_prefixes", "single_homed": "single_homed"},
+        )
 
     def api_deaggregation(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
@@ -600,51 +533,32 @@ class BgpExplorerService:
         deaggregation report (prefixes covered by a same-origin shorter
         mask), worst offenders first."""
         from bgpexplorer_spark.operators.analytics import deaggregation
-        from bgpexplorer_spark.operators.rib import current_state
 
         report = self._memo_report(
-            "deagg", rib,
-            lambda: deaggregation(
-                current_state(self.history.filter(F.col("rib") == rib))
-            ),
+            "deagg", rib, lambda: deaggregation(self._active(rib))
         )
-        rows = self._page(
+        return self._page(
             report.orderBy(
                 F.col("deagg_ratio").desc(), F.col("n_prefixes").desc(),
                 "origin_as",
             ),
             k, skip,
-        ).collect()
-        return [
-            {
-                "origin_as": r.origin_as, "n_prefixes": r.n_prefixes,
-                "n_covered": r.n_covered, "deagg_ratio": r.deagg_ratio,
-            }
-            for r in rows
-        ]
+            {"origin_as": "origin_as", "n_prefixes": "n_prefixes",
+             "n_covered": "n_covered", "deagg_ratio": "deagg_ratio"},
+        )
 
     def api_customer_cones(
         self, rib: str = "ipv4u", k: int = 50, skip: int = 0
     ) -> list[dict]:
         """GET /api/analytics/cones[?rib=&k=&skip=] — top-k
         customer-cone sizes from the inferred relationship graph."""
-        from bgpexplorer_spark.operators.analytics import (
-            as_relationships,
-            customer_cone,
-        )
-        from bgpexplorer_spark.operators.rib import current_state
+        from bgpexplorer_spark.operators.analytics import customer_cone
 
-        rel = self._memo_report(
-            "relationships", rib,  # shared with /relationships
-            lambda: as_relationships(
-                current_state(self.history.filter(F.col("rib") == rib))
-            ),
+        return self._page(
+            customer_cone(self._relationships(rib))
+            .orderBy(F.col("cone_size").desc(), "asn"),
+            k, skip, {"asn": "asn", "cone_size": "cone_size"},
         )
-        rows = self._page(
-            customer_cone(rel).orderBy(F.col("cone_size").desc(), "asn"),
-            k, skip,
-        ).collect()
-        return [{"asn": r.asn, "cone_size": r.cone_size} for r in rows]
 
     def api_subprefix_hijacks(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
@@ -655,15 +569,11 @@ class BgpExplorerService:
         suspicious (longest specific) first."""
         from bgpexplorer_spark.functions.iputil import v4_to_dotted
         from bgpexplorer_spark.operators.analytics import subprefix_hijacks
-        from bgpexplorer_spark.operators.rib import current_state
 
         report = self._memo_report(
-            "hijacks", rib,
-            lambda: subprefix_hijacks(
-                current_state(self.history.filter(F.col("rib") == rib))
-            ),
+            "hijacks", rib, lambda: subprefix_hijacks(self._active(rib))
         )
-        rows = self._page(
+        return self._page(
             report
             .withColumn("prefix", F.concat_ws(
                 "/", v4_to_dotted(F.col("addr_v4")),
@@ -673,15 +583,9 @@ class BgpExplorerService:
                 F.col("prefixlen").desc(), "addr_v4", "origin_as"
             ),
             k, skip,
-        ).collect()
-        return [
-            {
-                "prefix": r.prefix, "origin_as": r.origin_as,
-                "cover_plen": r.cover_plen,
-                "cover_origins": r.cover_origins_str,
-            }
-            for r in rows
-        ]
+            {"prefix": "prefix", "origin_as": "origin_as",
+             "cover_plen": "cover_plen", "cover_origins": "cover_origins_str"},
+        )
 
     def api_path_inflation(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
@@ -690,24 +594,16 @@ class BgpExplorerService:
         collapsed-path-length spread vs the shortest observed route,
         most inflated first."""
         from bgpexplorer_spark.operators.analytics import path_inflation
-        from bgpexplorer_spark.operators.rib import current_state
 
-        st = current_state(self.history.filter(F.col("rib") == rib))
-        rows = self._page(
-            path_inflation(st).orderBy(
+        return self._page(
+            path_inflation(self._active(rib)).orderBy(
                 (F.col("max_len") - F.col("min_len")).desc(),
                 F.col("n_inflated").desc(), "nlri_str",
             ),
             k, skip,
-        ).collect()
-        return [
-            {
-                "prefix": r.nlri_str, "min_len": r.min_len,
-                "max_len": r.max_len, "n_routes": r.n_routes,
-                "n_inflated": r.n_inflated,
-            }
-            for r in rows
-        ]
+            {"prefix": "nlri_str", "min_len": "min_len", "max_len": "max_len",
+             "n_routes": "n_routes", "n_inflated": "n_inflated"},
+        )
 
     def api_route_uptime(
         self, rib: str = "ipv4u", k: int = 1000, skip: int = 0
@@ -718,24 +614,18 @@ class BgpExplorerService:
         from bgpexplorer_spark.operators.analytics import route_uptime
 
         hist = self.history.filter(F.col("rib") == rib)
-        rows = self._page(
+        return self._page(
             route_uptime(hist).orderBy(
                 F.col("uptime_fraction").asc_nulls_last(),
                 F.col("n_events").desc(), "nlri_str", "session_id",
                 "path_id",
             ),
             k, skip,
-        ).collect()
-        return [
-            {
-                "prefix": r.nlri_str, "session_id": r.session_id,
-                "path_id": r.path_id,
-                "n_events": r.n_events, "uptime_ms": r.uptime_ms,
-                "observed_ms": r.observed_ms,
-                "uptime_fraction": r.uptime_fraction,
-            }
-            for r in rows
-        ]
+            {"prefix": "nlri_str", "session_id": "session_id",
+             "path_id": "path_id", "n_events": "n_events",
+             "uptime_ms": "uptime_ms", "observed_ms": "observed_ms",
+             "uptime_fraction": "uptime_fraction"},
+        )
 
     def api_convergence(
         self, rib: str = "ipv4u", gap_sec: int = 300,
@@ -753,15 +643,13 @@ class BgpExplorerService:
                 F.col("duration_ms").desc(), "nlri_str", "burst_id"
             ),
             k, skip,
-        ).collect()
-        return [
-            {
-                "prefix": r.nlri_str, "burst": r.burst_id,
-                "n_events": r.n_events, "n_sessions": r.n_sessions,
-                "start": str(r.burst_start), "duration_ms": r.duration_ms,
-            }
-            for r in rows
-        ]
+            {"prefix": "nlri_str", "burst": "burst_id", "n_events": "n_events",
+             "n_sessions": "n_sessions", "start": "burst_start",
+             "duration_ms": "duration_ms"},
+        )
+        for r in rows:
+            r["start"] = str(r["start"])
+        return rows
 
     def api_statistics(self) -> dict:
         """GET /api/statistics (O6) — the REFERENCE envelope
@@ -835,11 +723,8 @@ class BgpExplorerService:
     }
 
     def _cached(self, key: str, fetch, ttl: float = 1800.0) -> str:
-        import threading
         import time
 
-        if not hasattr(self, "_ttl_cache"):
-            self._ttl_cache = {}
         hit = self._ttl_cache.get(key)
         if hit is not None:
             ts, val = hit
@@ -877,7 +762,7 @@ class BgpExplorerService:
         from bgpexplorer_spark.operators.whois import query_whois, socket_transport
 
         timeout = float(getattr(self.svc_config, "whoisreqtimeout", 30) or 30)
-        transport = getattr(self, "whois_transport", None) or socket_transport(timeout)
+        transport = self.whois_transport or socket_transport(timeout)
         text = self._cached(
             f"whois:{query}",
             lambda: query_whois(
@@ -898,20 +783,130 @@ class BgpExplorerService:
         from bgpexplorer_spark.operators.whois import query_dns_ptr, udp_dns_transport
 
         servers = list(getattr(self.svc_config, "whoisdnses", None) or []) or None
-        transport = getattr(self, "dns_transport", None) or udp_dns_transport(servers)
+        transport = self.dns_transport or udp_dns_transport(servers)
         return self._cached(f"dns:{target}", lambda: query_dns_ptr(target, transport))
 
+# --- route table ------------------------------------------------------------
+# One entry per endpoint. Each query value a request carries goes through
+# its param's parser before the method runs (ValueError → 400 naming the
+# param); absent params are not passed, so the HTTP defaults are the
+# method signatures'. Timestamps are only checked and reach the method
+# as sent.
+
+def _int(lo: int):
+    def parse(v: str) -> int:
+        try:
+            n = int(v)
+        except ValueError:
+            n = lo - 1
+        if n < lo:
+            raise ValueError(f"expected an integer >= {lo}")
+        return n
+
+    return parse
+
+def _ts(v: str) -> str:
+    try:
+        parse_ts_param(v)
+    except (ValueError, OverflowError, OSError):
+        raise ValueError("expected epoch millis or an ISO 8601 time") from None
+    return v
+
+def _rib(v: str) -> str:
+    if v not in RIB_NAMES:
+        raise ValueError("expected one of " + ", ".join(RIB_NAMES))
+    return v
+
 _BOOL = {"true": True, "1": True, "false": False, "0": False}
+
+def _flag(v: str) -> bool:
+    if v.lower() not in _BOOL:
+        raise ValueError("expected true, false, 1 or 0")
+    return _BOOL[v.lower()]
+
+class _Route(NamedTuple):
+    method: str  # BgpExplorerService attribute, resolved per request
+    params: dict = {}  # query name → parser, or → (keyword, parser)
+    tail: str | None = None  # keyword for one path segment after the route
+    required: tuple = ()  # params (or the tail) a request must carry
+
+_UINT = _int(0)
+_PAGE = {"k": _UINT, "skip": _UINT}
+_REPORT = {"rib": _rib, **_PAGE}
+
+# path after /api/ → route; /api/ws and static files are served apart
+ROUTES: dict[str, _Route] = {
+    "ping": _Route("api_ping"),
+    "state": _Route("api_state"),
+    "statistics": _Route("api_statistics"),
+    "sessions": _Route("api_sessions"),
+    "whois": _Route("api_whois", {"query": str}, "mode", ("query",)),
+    "dns": _Route("api_dns", tail="target", required=("target",)),
+    "json": _Route("api_json", {
+        "filter": str, "skip": _UINT, "limit": _UINT, "maxdepth": _UINT,
+        "onlyactive": _flag, "changed_after": _ts, "changed_before": _ts,
+        "asof": _ts,
+    }, "rib", ("rib",)),
+    "analytics/moas": _Route("api_moas", {**_REPORT, "asof": _ts}),
+    "analytics/rpki": _Route("api_rpki", {**_REPORT, "asof": _ts}),
+    "analytics/diff": _Route("api_diff", {**_REPORT, "t1": _ts, "t2": _ts}),
+    "analytics/damping": _Route(
+        "api_damping", {**_REPORT, "at": _ts, "half_life": _int(1)}
+    ),
+    "analytics/bogons": _Route("api_bogons", _REPORT),
+    "analytics/sessions": _Route("api_session_stability", _PAGE),
+    "analytics/ages": _Route("api_route_ages", {"rib": _rib, "asof": _ts, "k": _UINT}),
+    "analytics/agreement": _Route("api_peer_agreement", _REPORT),
+    "analytics/relationships": _Route("api_as_relationships", _REPORT),
+    "analytics/martians": _Route("api_martians", _REPORT),
+    "analytics/upstreams": _Route("api_upstream_diversity", _REPORT),
+    "analytics/deagg": _Route("api_deaggregation", _REPORT),
+    "analytics/leaks": _Route("api_route_leaks", _REPORT),
+    "analytics/cones": _Route("api_customer_cones", _REPORT),
+    "analytics/inflation": _Route("api_path_inflation", _REPORT),
+    "analytics/uptime": _Route("api_route_uptime", _REPORT),
+    "analytics/hijacks": _Route("api_subprefix_hijacks", _REPORT),
+    "analytics/convergence": _Route(
+        "api_convergence", {**_REPORT, "gap": ("gap_sec", _UINT)}
+    ),
+    "analytics/flappers": _Route("api_flappers", {"rib": _rib, "k": _UINT}),
+}
+
+def _lookup(parts: list[str]) -> tuple[_Route | None, list[str]]:
+    """The route for the path segments after /api/, and the segment
+    left over for its ``tail`` (at most one)."""
+    for n in (2, 1):
+        route = ROUTES.get("/".join(parts[:n]))
+        if route is not None and len(parts) - n <= (route.tail is not None):
+            return route, parts[n:]
+    return None, []
+
+def _kwargs(route: _Route, rest: list[str], qs: dict[str, str]) -> dict:
+    """Typed keyword arguments for the route's method from the trailing
+    path segment and the query params the request carries."""
+    kwargs = {route.tail: rest[0]} if rest else {}
+    for name in route.required:
+        if name not in qs and name not in kwargs:
+            raise ValueError(f"{name}: required")
+    for name, spec in route.params.items():
+        if name in qs:
+            key, parse = spec if isinstance(spec, tuple) else (name, spec)
+            try:
+                kwargs[key] = parse(qs[name])
+            except ValueError as e:
+                raise ValueError(f"{name}: {e}") from None
+    return kwargs
 
 def _make_handler(svc: BgpExplorerService):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
             pass
 
-        def _send(self, obj, code=200):
-            body = (obj if isinstance(obj, str) else json.dumps(obj)).encode()
+        def _send(self, body, code=200, ctype="application/json"):
+            if not isinstance(body, bytes):
+                body = (body if isinstance(body, str) else json.dumps(body)).encode()
             self.send_response(code)
-            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
@@ -964,134 +959,32 @@ def _make_handler(svc: BgpExplorerService):
             rel = "/index.html" if urlpath == "/" else urlpath
             root_abs = os.path.realpath(root)
             full = os.path.realpath(os.path.join(root_abs, rel.lstrip("/")))
-            if not (full == root_abs or full.startswith(root_abs + os.sep)):
-                return self._send({"error": "not found"}, 404)
-            if not os.path.isfile(full):
+            inside = full == root_abs or full.startswith(root_abs + os.sep)
+            if not inside or not os.path.isfile(full):
                 return self._send({"error": "not found"}, 404)
             with open(full, "rb") as f:
                 body = f.read()
             ctype = mimetypes.guess_type(full)[0] or "application/octet-stream"
-            self.send_response(200)
-            self.send_header("Content-Type", ctype)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            self._send(body, 200, ctype)
 
         def do_GET(self):  # noqa: N802
             u = urlparse(self.path)
             parts = [p for p in u.path.split("/") if p]
-            qs = {k: v[0] for k, v in parse_qs(u.query).items()}
             try:
-                if parts[:2] == ["api", "ws"]:
-                    return self._ws_upgrade()
-                if parts[:2] == ["api", "whois"]:
-                    if not qs.get("query"):
-                        return self._send("Invalid WHOIS query", 400)
-                    mode = parts[2] if len(parts) > 2 else None
-                    return self._send(svc.api_whois(qs["query"], mode))
-                if parts[:2] == ["api", "dns"] and len(parts) > 2:
-                    return self._send(svc.api_dns(parts[2]))
-                if parts[:2] == ["api", "ping"]:
-                    return self._send("pong")
-                if parts[:2] == ["api", "state"]:
-                    return self._send(svc.api_state())
-                if parts[:2] == ["api", "statistics"]:
-                    return self._send(svc.api_statistics())
-                rib = qs.get("rib", "ipv4u")
-
-                def page(default_k=1000):
-                    # every analytics list endpoint takes the same
-                    # k (limit) + skip (offset) cap
-                    return {"k": int(qs.get("k", default_k)),
-                            "skip": int(qs.get("skip", 0))}
-
-                if parts[:3] == ["api", "analytics", "moas"]:
-                    return self._send(
-                        svc.api_moas(rib, qs.get("asof"), **page())
-                    )
-                if parts[:3] == ["api", "analytics", "rpki"]:
-                    return self._send(
-                        svc.api_rpki(rib, qs.get("asof"), **page())
-                    )
-                if parts[:3] == ["api", "analytics", "diff"]:
-                    return self._send(
-                        svc.api_diff(
-                            rib, qs.get("t1"), qs.get("t2"), **page()
-                        )
-                    )
-                if parts[:3] == ["api", "analytics", "damping"]:
-                    return self._send(
-                        svc.api_damping(
-                            rib, qs.get("at"),
-                            int(qs.get("half_life", 900)), **page(),
-                        )
-                    )
-                if parts[:3] == ["api", "analytics", "bogons"]:
-                    return self._send(svc.api_bogons(rib, **page()))
-                if parts[:3] == ["api", "analytics", "sessions"]:
-                    return self._send(svc.api_session_stability(**page()))
-                if parts[:3] == ["api", "analytics", "ages"]:
-                    return self._send(
-                        svc.api_route_ages(
-                            rib, qs.get("asof"), int(qs.get("k", 100)),
-                        )
-                    )
-                if parts[:3] == ["api", "analytics", "agreement"]:
-                    return self._send(svc.api_peer_agreement(rib, **page()))
-                if parts[:3] == ["api", "analytics", "relationships"]:
-                    return self._send(
-                        svc.api_as_relationships(rib, **page())
-                    )
-                if parts[:3] == ["api", "analytics", "martians"]:
-                    return self._send(svc.api_martians(rib, **page()))
-                if parts[:3] == ["api", "analytics", "upstreams"]:
-                    return self._send(
-                        svc.api_upstream_diversity(rib, **page())
-                    )
-                if parts[:3] == ["api", "analytics", "deagg"]:
-                    return self._send(svc.api_deaggregation(rib, **page()))
-                if parts[:3] == ["api", "analytics", "leaks"]:
-                    return self._send(svc.api_route_leaks(rib, **page(100)))
-                if parts[:3] == ["api", "analytics", "cones"]:
-                    return self._send(svc.api_customer_cones(rib, **page(50)))
-                if parts[:3] == ["api", "analytics", "inflation"]:
-                    return self._send(
-                        svc.api_path_inflation(rib, **page())
-                    )
-                if parts[:3] == ["api", "analytics", "uptime"]:
-                    return self._send(svc.api_route_uptime(rib, **page()))
-                if parts[:3] == ["api", "analytics", "hijacks"]:
-                    return self._send(
-                        svc.api_subprefix_hijacks(rib, **page())
-                    )
-                if parts[:3] == ["api", "analytics", "convergence"]:
-                    return self._send(
-                        svc.api_convergence(
-                            rib, int(qs.get("gap", 300)), **page()
-                        )
-                    )
-                if parts[:3] == ["api", "analytics", "flappers"]:
-                    return self._send(
-                        svc.api_flappers(rib, int(qs.get("k", 20)))
-                    )
-                if parts[:2] == ["api", "sessions"]:
-                    return self._send(svc.api_sessions())
-                if parts[:2] == ["api", "json"] and len(parts) == 3:
-                    params = {}
-                    if "filter" in qs:
-                        params["filter"] = qs["filter"]
-                    for k in ("skip", "limit", "maxdepth"):
-                        if k in qs:
-                            params[k] = int(qs[k])
-                    if "onlyactive" in qs:
-                        params["onlyactive"] = _BOOL.get(qs["onlyactive"].lower(), False)
-                    for k in ("changed_after", "changed_before", "asof"):
-                        if k in qs:
-                            params[k] = qs[k]
-                    return self._send(svc.api_json(parts[2], **params))
                 if parts[:1] != ["api"]:
                     return self._send_file(u.path)
-                return self._send({"error": "not found"}, 404)
+                if parts[1:2] == ["ws"]:
+                    return self._ws_upgrade()
+                route, rest = _lookup(parts[1:])
+                if route is None:
+                    return self._send({"error": "not found"}, 404)
+                qs = {k: v[0] for k, v in parse_qs(u.query).items()}
+                try:
+                    kwargs = _kwargs(route, rest, qs)
+                except ValueError as e:
+                    return self._send({"error": str(e)}, 400)
+                # resolved per request, so class-level wrappers apply
+                return self._send(getattr(svc, route.method)(**kwargs))
             except Exception as e:  # surface engine errors as 500 JSON
                 return self._send({"error": str(e)[:500]}, 500)
 

@@ -873,8 +873,6 @@ def bpe_encode(
     inline_max: int = BPE_INLINE_MAX,
     broadcast_vocab: bool = True,
     counts_only: bool = False,
-    word_counts: bool = False,
-    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Apply a TRAINED BPE merges table to encode a corpus (Sennrich et
     al. 2016 §3.2 application pass; :func:`bpe_pair_counts` delivers the
@@ -885,13 +883,7 @@ def bpe_encode(
     ``counts_only=True`` returns just (id, n_tokens) and skips the
     sorted-collect reassembly of every token — the cheap form for
     consumers that never read the token stream (fertility, token-budget
-    accounting). With ``counts_only``, ``word_counts=True`` adds
-    ``n_words`` (the whitespace word count — ``count(_w)`` in the SAME
-    per-doc aggregate, exactly ``size(tokens(lower(text)))`` since the
-    explode rows are those words) and ``keep_cols`` carries per-doc
-    constant columns (e.g. a language tag) through the aggregate via
-    ``max()`` — both let consumers like :func:`bpe_fertility` skip a
-    second corpus tokenize and a corpus-keyed join (r12).
+    accounting).
 
     Scale shape — the corpus is never re-tokenized per occurrence:
 
@@ -918,10 +910,8 @@ def bpe_encode(
     spaces, so the ``"a b"`` rule keys are unambiguous). Everything is
     JVM Column algebra — no UDFs, no driver loop.
     """
-    extra = [F.col(c) for c in (keep_cols or [])]
     ex = df.select(
         F.col(id_col).alias("_id"),
-        *extra,
         F.posexplode_outer(tokens(F.lower(F.col(text_col)))).alias("_pos", "_w"),
     )
     vocab = ex.select("_w").where(F.col("_w").isNotNull()).distinct()
@@ -937,19 +927,12 @@ def bpe_encode(
         # consumers that only need token COUNTS (fertility, budget
         # accounting) skip the sorted-collect reassembly of every token
         # — one map-side-combinable sum(size) per doc instead
-        aggs = [F.sum(F.size("_toks")).alias("n_tokens")]
-        if word_counts:  # count() skips the NULL _w of zero-word docs
-            aggs.append(F.count("_w").alias("n_words"))
-        # keep_cols are per-doc constants; max() re-emits the value
-        aggs.extend(F.max(c).alias(c) for c in (keep_cols or []))
         return (
             joined.groupBy("_id")
-            .agg(*aggs)
+            .agg(F.sum(F.size("_toks")).alias("n_tokens"))
             .select(
                 F.col("_id").alias(id_col),
                 F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-                *([F.col("n_words")] if word_counts else []),
-                *[F.col(c) for c in (keep_cols or [])],
             )
         )
     per_doc = (
@@ -1066,29 +1049,31 @@ def bpe_fertility(
     :func:`bpe_encode` and aggregates per ``group_col``. Output:
     (group, n_docs, n_words, n_tokens, fertility round-half-up 4).
 
-    Scale shape (r12, guide §2.3/§2.4 — don't compute what a shared
-    aggregate already holds): bpe_encode's corpus-once/vocab-fold shape
-    with the word count and group riding ITS per-doc aggregate
-    (``counts_only`` + ``word_counts`` + ``keep_cols``) — the encoder's
-    explode rows ARE the lowercased whitespace words, so
-    ``count(_w)`` per doc equals ``size(tokens(lower(text)))`` exactly
-    and the previous shape's second full corpus tokenize plus its
-    merge-pinned corpus-keyed join (two exchanges + sorts) are removed
-    outright; one tiny group-keyed aggregate remains. Determinism:
-    exact integer arithmetic floored half-up onto the 1e-4 grid (the
-    knn_density construction). Row-set equality with the joined shape
-    proven both directions at sf0.1 and sf1 (r12)."""
+    Scale shape: bpe_encode's corpus-once/vocab-fold shape, plus one
+    corpus-keyed join of the (id, n_tokens) result against the (id,
+    group, n_words) projection — both sides corpus-derived, so the
+    join is pinned to a shuffle (never a broadcast build; the r10
+    rule), then one tiny group-keyed aggregate. The word count uses
+    the SAME tokenizer as the encoder (lowercased whitespace words),
+    so fertility is exactly Σtokens/Σwords over identical word sets.
+    Determinism: exact integer arithmetic floored half-up onto the
+    1e-4 grid (the knn_density construction)."""
     enc = bpe_encode(
         df, merges, id_col=id_col, text_col=text_col,
         inline_max=inline_max, broadcast_vocab=broadcast_vocab,
         counts_only=True,  # skips the per-doc token-stream reassembly
-        word_counts=True, keep_cols=[group_col],
-    )
+    ).select(F.col(id_col).alias("_fid"), "n_tokens").hint("merge")
+    words = df.select(
+        F.col(id_col).alias("_fid"),
+        F.col(group_col).alias("_grp"),
+        F.size(tokens(F.lower(F.col(text_col)))).alias("_nw"),
+    ).hint("merge")
     agg = (
-        enc.groupBy(F.col(group_col).alias("_grp"))
+        words.join(enc, "_fid")
+        .groupBy("_grp")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("n_words"),
+            F.sum("_nw").alias("n_words"),
             F.sum("n_tokens").alias("n_tokens"),
         )
     )

@@ -411,7 +411,7 @@ def live_current_state_tws(updates: DataFrame) -> DataFrame:
     RocksDB-only by design) AND the google.protobuf runtime
     (:func:`_require_tws_runtime`) — the latter is absent in this
     container, so the r10-ask-#7 A/B is import-gated, one dependency
-    away: see ARCHITECTURE.md r11 for the decision paragraph. The
+    away: see ARCHITECTURE.md "Streaming state paths". The
     applyInPandasWithState form stays the default/reference path."""
     _require_tws_runtime()
     import pandas as pd
